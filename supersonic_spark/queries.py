@@ -53,6 +53,57 @@ def q(name: str, oracle: str | None = None):
     return deco
 
 
+#: Operator builders: name -> (builder, inputs).  ``inputs(spark, sf_dir)``
+#: loads the builder's input tables; the builder makes the operator call,
+#: once, with the operator's one parameterization.  The registry entry of
+#: the same name is a check wrapper (see :func:`checked`) around the SAME
+#: builder, so the plan a tool times is the plan the oracle verifies.
+OPERATORS: dict[str, tuple[Callable[..., DataFrame], Callable]] = {}
+
+
+def operator(name: str, inputs: Callable):
+    def deco(fn):
+        OPERATORS[name] = (fn, inputs)
+        return fn
+
+    return deco
+
+
+def checked(name: str, oracle: str):
+    """Register ``check(op, *inputs)`` as registry entry ``name``: it gets
+    the operator builder ``op`` and the builder's inputs, may restrict or
+    augment the inputs, and fuses exact ground truth around ``op``'s
+    output."""
+
+    def deco(check):
+        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            builder, inputs = OPERATORS[name]
+            return check(builder, *inputs(spark, sf_dir))
+
+        REGISTRY[name] = (run, oracle)
+        return check
+
+    return deco
+
+
+def operator_query(name: str) -> Callable[[SparkSession, str], DataFrame]:
+    """The (spark, sf_dir) -> DataFrame a tool runs for ``name``: the
+    operator builder over its inputs when the name has one, else the
+    registry query.  Bench, scaling, profiling and plan dumps resolve every
+    name here."""
+    import supersonic_spark.queries_analytics  # noqa: F401  (each module registers)
+    import supersonic_spark.queries_expr  # noqa: F401
+    import supersonic_spark.queries_pipeline  # noqa: F401
+    import supersonic_spark.queries_quality  # noqa: F401
+    import supersonic_spark.queries_scale  # noqa: F401
+    import supersonic_spark.queries_tpch  # noqa: F401
+
+    if name not in OPERATORS:
+        return REGISTRY[name][0]
+    builder, inputs = OPERATORS[name]
+    return lambda spark, sf_dir: builder(*inputs(spark, sf_dir))
+
+
 def _t(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return load_tables(spark, sf_dir)
 

@@ -20,7 +20,8 @@ from pyspark.sql.window import Window
 
 from supersonic_spark.operators import core
 from supersonic_spark.pipeline import dedup, multimodal, similarity, textstats
-from supersonic_spark.queries import _t, q
+from supersonic_spark.queries import _t, checked, operator, q
+from supersonic_spark.session import track_persist
 
 # =====================================================================
 # dedup
@@ -99,6 +100,90 @@ WITH sh AS (
 """
 
 
+def _exact_pairs(docs, threshold: float = 0.1):
+    """Exact word-3-gram Jaccard pairs (id_a < id_b) at J ≥ ``threshold``:
+    the ground truth the MinHash and SimHash checks join against."""
+    return dedup.ngram_jaccard_pairs(
+        docs, "doc_id", "text", shingle_words=3, threshold=threshold
+    )
+
+
+def _hi_recall(found, exact):
+    """One row: ``n_exact_hi`` (exact pairs at J ≥ 0.8) and
+    ``recall_hi_ok`` (``found``'s (id_a, id_b) pairs contain ≥ 95% of them
+    — 16 bands × 4 rows put the per-pair banding miss at ≈ 2·10⁻⁴)."""
+    ex_agg = exact.agg(
+        F.coalesce(F.sum((F.col("jaccard") >= 0.8).cast("int")), F.lit(0)).alias(
+            "n_exact_hi"
+        )
+    )
+    hi_found = found.join(
+        exact.filter(F.col("jaccard") >= 0.8).select("id_a", "id_b"), ["id_a", "id_b"]
+    ).agg(F.count(F.lit(1)).alias("n_hi_found"))
+    return ex_agg.crossJoin(hi_found).select(
+        F.col("n_exact_hi").cast("long").alias("n_exact_hi"),
+        (F.col("n_hi_found") >= 0.95 * F.col("n_exact_hi")).alias("recall_hi_ok"),
+    )
+
+
+def _estimate_bounds(found, exact):
+    """One row of the estimator checks on ``found`` (id_a, id_b, est):
+    ``est_err_ok`` — |est − exact J| ≤ 0.25 (4σ at 64 hashes) on every pair
+    both sides have; ``spurious_hi_ok`` — no pair estimated ≥ 0.5 lies
+    outside the exact J ≥ 0.1 set."""
+    joined = found.join(
+        exact.select("id_a", "id_b", F.col("jaccard").alias("ex")),
+        ["id_a", "id_b"],
+        "left",
+    )
+    return joined.agg(
+        F.coalesce(
+            F.max(F.when(F.col("ex").isNotNull(), F.abs(F.col("est") - F.col("ex")))),
+            F.lit(0.0),
+        ).alias("max_err"),
+        F.coalesce(
+            F.sum(((F.col("est") >= 0.5) & F.col("ex").isNull()).cast("int")), F.lit(0)
+        ).alias("n_spurious_hi"),
+    ).select(
+        (F.col("max_err") <= 0.25).alias("est_err_ok"),
+        (F.col("n_spurious_hi") == 0).alias("spurious_hi_ok"),
+    )
+
+
+def _n_mismatch(a, b, keys, value, tol, also=()):
+    """One row, ``n_mismatch``: rows of ``a`` FULL-joined to ``b`` on
+    ``keys`` that are present on one side only, differ in ``value`` by
+    more than ``tol``, or differ in any ``also`` column — 0 iff the two
+    result sets agree."""
+    cols = (value, *also)
+    diff = a.select(*keys, *[F.col(c).alias(f"__a_{c}") for c in cols]).join(
+        b.select(*keys, *[F.col(c).alias(f"__b_{c}") for c in cols]), keys, "full"
+    )
+    va, vb = F.col(f"__a_{value}"), F.col(f"__b_{value}")
+    bad = va.isNull() | vb.isNull() | (F.abs(va - vb) > tol)
+    for c in also:
+        bad = bad | (F.col(f"__a_{c}") != F.col(f"__b_{c}"))
+    return diff.agg(F.coalesce(F.sum(bad.cast("int")), F.lit(0)).alias("n_mismatch"))
+
+
+def _documents(spark, sf_dir):
+    return (_t(spark, sf_dir)["documents"],)
+
+
+def _even_odd_documents(spark, sf_dir):
+    """(corpus, batch): even-id documents are the already-indexed corpus,
+    odd-id documents the new batch."""
+    docs = _t(spark, sf_dir)["documents"]
+    return (
+        core.filter_op(docs, F.col("doc_id") % 2 == 0),
+        core.filter_op(docs, F.col("doc_id") % 2 == 1),
+    )
+
+
+#: MinHash pair threshold of every MinHash operator builder below
+_MINHASH_THRESHOLD = 0.5
+
+
 _MINHASH_LSH_ORACLE = _exact_pair_stats_sql("""
 SELECT COUNT(*)::BIGINT AS n_exact,
        COALESCE(SUM((jac >= 0.8)::INT), 0)::BIGINT AS n_exact_hi,
@@ -106,45 +191,46 @@ SELECT COUNT(*)::BIGINT AS n_exact,
 FROM j WHERE jac >= 0.1""")
 
 
-@q("dedup_minhash_lsh", _MINHASH_LSH_ORACLE)
-def q_dedup_minhash_lsh(spark, sf_dir):
-    """MinHash+LSH near-dup candidates (shingle→minhash→band→bucket-join),
-    verified by exact Jaccard — checked against the exact-pair ground truth
-    in one plan.  The oracle pins the exact pair counts (DuckDB computes
-    the same 3-gram Jaccard) plus two LSH invariants as booleans:
-    every emitted pair really has J ≥ threshold (verification is exact, so
-    the LSH output is a SUBSET of the exact pairs), and banding recall at
-    J ≥ 0.8 is ≥ 95% (16 bands × 4 rows ⇒ per-pair miss ≈ 2·10⁻⁴)."""
-    t = _t(spark, sf_dir)
-    docs = t["documents"]
-    exact = dedup.ngram_jaccard_pairs(
-        docs, "doc_id", "text", shingle_words=3, threshold=0.1
+@operator("dedup_minhash_lsh", _documents)
+def op_dedup_minhash_lsh(docs):
+    """MinHash+LSH near-dup pairs (shingle→minhash→band→bucket-join),
+    verified by exact Jaccard ≥ 0.5."""
+    return dedup.minhash_lsh_pairs(
+        docs, "doc_id", "text", num_hashes=64, bands=16, shingle_words=3,
+        threshold=_MINHASH_THRESHOLD,
     )
-    lsh = dedup.minhash_lsh_pairs(
-        docs, "doc_id", "text", num_hashes=64, bands=16, shingle_words=3, threshold=0.1
-    ).select("id_a", "id_b")
-    ex_agg = exact.agg(
-        F.count(F.lit(1)).alias("n_exact"),
-        F.coalesce(F.sum((F.col("jaccard") >= 0.8).cast("int")), F.lit(0)).alias(
-            "n_exact_hi"
+
+
+@checked("dedup_minhash_lsh", _MINHASH_LSH_ORACLE)
+def q_dedup_minhash_lsh(op, docs):
+    """MinHash+LSH checked against the exact-pair ground truth in one
+    plan.  The oracle pins the exact pair counts (DuckDB computes the same
+    3-gram Jaccard) plus two LSH invariants as booleans: every emitted pair
+    really has J ≥ the operator's threshold (verification is exact, so the
+    LSH output is a SUBSET of the exact pairs), and banding recall at
+    J ≥ 0.8 is ≥ 95%."""
+    exact = _exact_pairs(docs)
+    lsh = op(docs).select("id_a", "id_b")
+    n_exact = exact.agg(F.count(F.lit(1)).cast("long").alias("n_exact"))
+    outside = lsh.join(
+        exact.filter(F.col("jaccard") >= _MINHASH_THRESHOLD).select(
+            "id_a", "id_b", "jaccard"
         ),
-    )
-    hi_found = lsh.join(
-        exact.filter(F.col("jaccard") >= 0.8).select("id_a", "id_b"), ["id_a", "id_b"]
-    ).agg(F.count(F.lit(1)).alias("n_hi_found"))
-    outside = lsh.join(exact.select("id_a", "id_b", "jaccard"), ["id_a", "id_b"], "left").agg(
+        ["id_a", "id_b"],
+        "left",
+    ).agg(
         F.coalesce(F.sum(F.col("jaccard").isNull().cast("int")), F.lit(0)).alias(
             "n_outside"
         )
     )
     return (
-        ex_agg.crossJoin(hi_found)
+        n_exact.crossJoin(_hi_recall(lsh, exact))
         .crossJoin(outside)
         .select(
-            F.col("n_exact").cast("long").alias("n_exact"),
-            F.col("n_exact_hi").cast("long").alias("n_exact_hi"),
+            "n_exact",
+            "n_exact_hi",
             (F.col("n_outside") == 0).alias("lsh_subset_ok"),
-            (F.col("n_hi_found") >= 0.95 * F.col("n_exact_hi")).alias("recall_hi_ok"),
+            "recall_hi_ok",
         )
     )
 
@@ -155,54 +241,28 @@ SELECT COALESCE(SUM((jac >= 0.8)::INT), 0)::BIGINT AS n_exact_hi,
 FROM j WHERE jac >= 0.1""")
 
 
-@q("dedup_minhash_estimate", _MINHASH_EST_ORACLE)
-def q_dedup_minhash_estimate(spark, sf_dir):
+@operator("dedup_minhash_estimate", _documents)
+def op_dedup_minhash_estimate(docs):
     """MinHash+LSH near-dups scored by the signature-match Jaccard
-    *estimator* (verify="estimate") — the 1-shuffle scale path — bound
-    against the exact ground truth: estimator error ≤ 0.25 (4σ at 64
-    hashes) on every pair both sides agree on, ≥95% banding recall at
-    J ≥ 0.8, and no high-estimate pair (est ≥ 0.5) outside the exact
-    J ≥ 0.1 set."""
-    t = _t(spark, sf_dir)
-    docs = t["documents"]
-    exact = dedup.ngram_jaccard_pairs(
-        docs, "doc_id", "text", shingle_words=3, threshold=0.1
-    )
-    est = dedup.minhash_lsh_pairs(
+    *estimator* (verify="estimate") — the 1-shuffle scale path."""
+    return dedup.minhash_lsh_pairs(
         docs, "doc_id", "text", num_hashes=64, bands=16, shingle_words=3,
-        threshold=0.1, verify="estimate",
-    ).select("id_a", "id_b", F.col("jaccard").alias("est"))
-    joined = est.join(
-        exact.select("id_a", "id_b", F.col("jaccard").alias("ex")),
-        ["id_a", "id_b"],
-        "left",
+        threshold=_MINHASH_THRESHOLD, verify="estimate",
     )
-    stats = joined.agg(
-        F.coalesce(F.max(F.when(F.col("ex").isNotNull(),
-                                F.abs(F.col("est") - F.col("ex")))), F.lit(0.0)).alias(
-            "max_err"
-        ),
-        F.coalesce(
-            F.sum(((F.col("est") >= 0.5) & F.col("ex").isNull()).cast("int")), F.lit(0)
-        ).alias("n_spurious_hi"),
-    )
-    ex_agg = exact.agg(
-        F.coalesce(F.sum((F.col("jaccard") >= 0.8).cast("int")), F.lit(0)).alias(
-            "n_exact_hi"
-        )
-    )
-    hi_found = est.join(
-        exact.filter(F.col("jaccard") >= 0.8).select("id_a", "id_b"), ["id_a", "id_b"]
-    ).agg(F.count(F.lit(1)).alias("n_hi_found"))
+
+
+@checked("dedup_minhash_estimate", _MINHASH_EST_ORACLE)
+def q_dedup_minhash_estimate(op, docs):
+    """The MinHash estimator bound against the exact ground truth:
+    estimator error ≤ 0.25 on every pair both sides agree on, ≥95%
+    banding recall at J ≥ 0.8, and no high-estimate pair outside the exact
+    J ≥ 0.1 set."""
+    exact = _exact_pairs(docs)
+    est = op(docs).select("id_a", "id_b", F.col("jaccard").alias("est"))
     return (
-        ex_agg.crossJoin(stats)
-        .crossJoin(hi_found)
-        .select(
-            F.col("n_exact_hi").cast("long").alias("n_exact_hi"),
-            (F.col("max_err") <= 0.25).alias("est_err_ok"),
-            (F.col("n_hi_found") >= 0.95 * F.col("n_exact_hi")).alias("recall_hi_ok"),
-            (F.col("n_spurious_hi") == 0).alias("spurious_hi_ok"),
-        )
+        _hi_recall(est, exact)
+        .crossJoin(_estimate_bounds(est, exact))
+        .select("n_exact_hi", "est_err_ok", "recall_hi_ok", "spurious_hi_ok")
     )
 
 
@@ -214,78 +274,41 @@ SELECT (SELECT COUNT(*) FROM documents WHERE doc_id % 2 = 1)::BIGINT AS n_batch,
 FROM j WHERE jac >= 0.1 AND (id_a % 2) <> (id_b % 2)""")
 
 
-@q("dedup_incremental_minhash", _INCREMENTAL_ORACLE)
-def q_dedup_incremental_minhash(spark, sf_dir):
-    """Incremental dedup against a PERSISTED MinHash index: even-id docs
-    are the already-ingested corpus (their minhash_band_index is written
-    to parquet and read back — the cross-session artifact), odd-id docs
-    are the new batch probed against it via dedup_against_index.  The
-    corpus text is never re-shingled.  Bound against exact cross-parity
-    3-gram Jaccard ground truth with the estimator-oracle pattern:
-    estimator error ≤ 0.25 (4σ at 64 hashes) on agreed pairs, ≥95%
-    banding recall at exact J ≥ 0.8, and no high-estimate pair outside
-    the exact J ≥ 0.1 set."""
-    import os
-    import tempfile
+@operator("dedup_incremental_minhash", _even_odd_documents)
+def op_dedup_incremental_minhash(corpus, batch):
+    """Incremental dedup: index the corpus once (minhash_band_index) and
+    probe the new batch against it (dedup_against_index) — the corpus
+    text is shingled only for the index.  The index is persisted within
+    the run because dedup_against_index reads it twice (band join and
+    signature fetch); release_two_pass_caches drops it between runs."""
+    index = track_persist(dedup.minhash_band_index(corpus, "doc_id", "text"))
+    return dedup.dedup_against_index(
+        batch, index, "doc_id", "text", threshold=_MINHASH_THRESHOLD
+    )
 
-    t = _t(spark, sf_dir)
-    docs = t["documents"]
-    corpus = core.filter_op(docs, F.col("doc_id") % 2 == 0)
-    batch = core.filter_op(docs, F.col("doc_id") % 2 == 1)
 
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    idx_path = os.path.join(tempfile.gettempdir(), f"ss_minhash_index{tag}")
-    dedup.minhash_band_index(corpus, "doc_id", "text").write.mode(
-        "overwrite"
-    ).partitionBy("band").parquet(idx_path)
-    index = spark.read.parquet(idx_path)
-
-    found = dedup.dedup_against_index(
-        batch, index, "doc_id", "text", threshold=0.1
-    ).select(
+@checked("dedup_incremental_minhash", _INCREMENTAL_ORACLE)
+def q_dedup_incremental_minhash(op, corpus, batch):
+    """Incremental dedup of the odd-id batch against the even-id corpus'
+    MinHash index, bound against exact cross-parity 3-gram Jaccard ground
+    truth with the estimator checks of dedup_minhash_estimate."""
+    found = op(corpus, batch).select(
         F.least(F.col("new_id"), F.col("index_id")).alias("id_a"),
         F.greatest(F.col("new_id"), F.col("index_id")).alias("id_b"),
         F.col("jaccard").alias("est"),
     )
-    exact = dedup.ngram_jaccard_pairs(
-        docs, "doc_id", "text", shingle_words=3, threshold=0.1
-    ).filter((F.col("id_a") % 2) != (F.col("id_b") % 2))
-    joined = found.join(
-        exact.select("id_a", "id_b", F.col("jaccard").alias("ex")),
-        ["id_a", "id_b"],
-        "left",
+    exact = _exact_pairs(corpus.unionByName(batch)).filter(
+        (F.col("id_a") % 2) != (F.col("id_b") % 2)
     )
-    stats = joined.agg(
-        F.coalesce(
-            F.max(F.when(F.col("ex").isNotNull(), F.abs(F.col("est") - F.col("ex")))),
-            F.lit(0.0),
-        ).alias("max_err"),
-        F.coalesce(
-            F.sum(((F.col("est") >= 0.5) & F.col("ex").isNull()).cast("int")), F.lit(0)
-        ).alias("n_spurious_hi"),
-    )
-    ex_agg = exact.agg(
-        F.coalesce(F.sum((F.col("jaccard") >= 0.8).cast("int")), F.lit(0)).alias(
-            "n_exact_hi"
-        )
-    )
-    hi_found = found.join(
-        exact.filter(F.col("jaccard") >= 0.8).select("id_a", "id_b"), ["id_a", "id_b"]
-    ).agg(F.count(F.lit(1)).alias("n_hi_found"))
-    n_batch = batch.agg(F.count(F.lit(1)).alias("n_batch"))
-    n_corpus = corpus.agg(F.count(F.lit(1)).alias("n_corpus"))
+    n_batch = batch.agg(F.count(F.lit(1)).cast("long").alias("n_batch"))
+    n_corpus = corpus.agg(F.count(F.lit(1)).cast("long").alias("n_corpus"))
     return (
         n_batch.crossJoin(n_corpus)
-        .crossJoin(ex_agg)
-        .crossJoin(stats)
-        .crossJoin(hi_found)
+        .crossJoin(_hi_recall(found, exact))
+        .crossJoin(_estimate_bounds(found, exact))
         .select(
-            F.col("n_batch").cast("long").alias("n_batch"),
-            F.col("n_corpus").cast("long").alias("n_corpus"),
-            F.col("n_exact_hi").cast("long").alias("n_exact_hi"),
-            (F.col("max_err") <= 0.25).alias("est_err_ok"),
-            (F.col("n_hi_found") >= 0.95 * F.col("n_exact_hi")).alias("recall_hi_ok"),
-            (F.col("n_spurious_hi") == 0).alias("spurious_hi_ok"),
+            "n_batch", "n_corpus", "n_exact_hi",
+            "est_err_ok", "recall_hi_ok", "spurious_hi_ok",
         )
     )
 
@@ -372,48 +395,20 @@ def q_streaming_incremental_dedup(spark, sf_dir):
     )
 
     ref = dedup.dedup_against_index(batch, index, "doc_id", "text", threshold=0.1)
-    diff = pairs.withColumnRenamed("jaccard", "j_s").join(
-        ref.withColumnRenamed("jaccard", "j_b"), ["new_id", "index_id"], "full"
-    )
-    n_mismatch = diff.agg(
-        F.coalesce(
-            F.sum(
-                (
-                    F.col("j_s").isNull()
-                    | F.col("j_b").isNull()
-                    | (F.abs(F.col("j_s") - F.col("j_b")) > 1e-12)
-                ).cast("int")
-            ),
-            F.lit(0),
-        ).alias("n_mismatch")
-    )
-    exact = dedup.ngram_jaccard_pairs(
-        docs, "doc_id", "text", shingle_words=3, threshold=0.1
-    ).filter((F.col("id_a") % 2) != (F.col("id_b") % 2))
-    ex_agg = exact.agg(
-        F.coalesce(F.sum((F.col("jaccard") >= 0.8).cast("int")), F.lit(0)).alias(
-            "n_exact_hi"
-        )
-    )
+    n_mismatch = _n_mismatch(pairs, ref, ["new_id", "index_id"], "jaccard", 1e-12)
+    exact = _exact_pairs(docs).filter((F.col("id_a") % 2) != (F.col("id_b") % 2))
     canon = pairs.select(
         F.least(F.col("new_id"), F.col("index_id")).alias("id_a"),
         F.greatest(F.col("new_id"), F.col("index_id")).alias("id_b"),
     )
-    hi_found = canon.join(
-        exact.filter(F.col("jaccard") >= 0.8).select("id_a", "id_b"), ["id_a", "id_b"]
-    ).agg(F.count(F.lit(1)).alias("n_hi_found"))
-    n_batch = batch.agg(F.count(F.lit(1)).alias("n_batch"))
-    n_corpus = corpus.agg(F.count(F.lit(1)).alias("n_corpus"))
+    n_batch = batch.agg(F.count(F.lit(1)).cast("long").alias("n_batch"))
+    n_corpus = corpus.agg(F.count(F.lit(1)).cast("long").alias("n_corpus"))
     return (
         n_batch.crossJoin(n_corpus)
-        .crossJoin(ex_agg)
-        .crossJoin(hi_found)
+        .crossJoin(_hi_recall(canon, exact))
         .crossJoin(n_mismatch)
         .select(
-            F.col("n_batch").cast("long").alias("n_batch"),
-            F.col("n_corpus").cast("long").alias("n_corpus"),
-            F.col("n_exact_hi").cast("long").alias("n_exact_hi"),
-            (F.col("n_hi_found") >= 0.95 * F.col("n_exact_hi")).alias("recall_hi_ok"),
+            "n_batch", "n_corpus", "n_exact_hi", "recall_hi_ok",
             (F.col("n_mismatch") == 0).alias("stream_matches_batch_ok"),
         )
     )
@@ -430,19 +425,21 @@ FROM dup
 """
 
 
-@q("dedup_simhash", _SIMHASH_ORACLE)
-def q_dedup_simhash(spark, sf_dir):
+@operator("dedup_simhash", _documents)
+def op_dedup_simhash(docs):
     """SimHash near-dup pairs within Hamming distance 3 (4×16-bit band
-    blocking), checked against DuckDB-computable ground truth: every
+    blocking)."""
+    return dedup.simhash_dedup(docs, "doc_id", "text", shingle_words=3, max_hamming=3)
+
+
+@checked("dedup_simhash", _SIMHASH_ORACLE)
+def q_dedup_simhash(op, docs):
+    """SimHash checked against DuckDB-computable ground truth: every
     EXACT duplicate text pair must be found (identical text ⇒ identical
     SimHash ⇒ Hamming 0 ⇒ same bands — deterministic), and every found
     pair must be a genuine near-dup (word-3-gram Jaccard ≥ 0.3; unrelated
     docs sit at Hamming ≈ 32 of 64, astronomically above the cutoff)."""
-    t = _t(spark, sf_dir)
-    docs = t["documents"]
-    found = dedup.simhash_dedup(
-        docs, "doc_id", "text", shingle_words=3, max_hamming=3
-    ).select("id_a", "id_b")
+    found = op(docs).select("id_a", "id_b")
     # exact-dup pairs from text equality (dups are rare: self-join on text
     # stays output-sized)
     d = docs.select("doc_id", "text")
@@ -458,9 +455,7 @@ def q_dedup_simhash(spark, sf_dir):
     )
     # precision: join found pairs to the exact Jaccard table (floor 0.05 so
     # a hypothetical low-J false positive surfaces as a NULL)
-    exact = dedup.ngram_jaccard_pairs(
-        docs, "doc_id", "text", shingle_words=3, threshold=0.05
-    )
+    exact = _exact_pairs(docs, threshold=0.05)
     prec = found.join(
         exact.select("id_a", "id_b", "jaccard"), ["id_a", "id_b"], "left"
     ).agg(
@@ -488,6 +483,117 @@ def q_dedup_simhash(spark, sf_dir):
 # =====================================================================
 # similarity search
 # =====================================================================
+
+_TOPK_ORACLE = """
+WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
+           FROM embeddings WHERE vec_id < 10),
+     c AS (SELECT vec_id AS corpus_id, CAST(embedding AS DOUBLE[]) AS cv
+           FROM embeddings WHERE vec_id >= 10),
+     s AS (SELECT query_id, corpus_id,
+                  list_dot_product(qv, cv)
+                    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv)))
+                    AS similarity
+           FROM q CROSS JOIN c),
+     r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                                        ORDER BY similarity DESC, corpus_id) AS rnk
+           FROM s)
+SELECT query_id, corpus_id, round(similarity, 6) AS similarity, CAST(rnk AS INT) AS rank
+FROM r WHERE rnk <= 5
+"""
+
+
+def _ann_inputs(spark, sf_dir):
+    """(queries, corpus): the first 10 vectors as (query_id, query_vec),
+    the whole table as (corpus_id, corpus_vec) — every query is also in
+    the corpus."""
+    emb = _t(spark, sf_dir)["embeddings"]
+    queries = emb.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    corpus = emb.select(
+        F.col("vec_id").alias("corpus_id"), F.col("embedding").alias("corpus_vec")
+    )
+    return queries, corpus
+
+
+def _ann_index_inputs(spark, sf_dir):
+    """The ANN inputs plus the directory a persisted index is written to."""
+    import os
+    import tempfile
+
+    tag = sf_dir.rstrip("/").replace("/", "_")
+    path = os.path.join(tempfile.gettempdir(), f"ss_ivf_index{tag}")
+    return (*_ann_inputs(spark, sf_dir), path)
+
+
+def _ann_signal_oracle(*flags: str) -> str:
+    """DuckDB side of :func:`_ann_signal`: exact best non-self neighbor
+    and corpus count per query, and a literal TRUE per boolean column."""
+    trues = ", ".join(f"TRUE AS {f}" for f in flags)
+    return f"""SELECT q.vec_id AS query_id,
+              (SELECT c.vec_id FROM embeddings c WHERE c.vec_id <> q.vec_id
+               ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC,
+                        c.vec_id LIMIT 1)::BIGINT AS best_other,
+              (SELECT COUNT(*) FROM embeddings)::BIGINT AS n_corpus,
+              {trues}
+       FROM embeddings q WHERE q.vec_id < 10 ORDER BY 1"""
+
+
+def _ann_signal(ann, queries, corpus, ok_col, n_mismatch=None, match_col=None):
+    """The ANN signal floor, one row per query: ``best_other`` (the exact
+    scorer's best non-self neighbor — DuckDB pins it), ``n_corpus``
+    (coverage), and ``ok_col``: the ``ann`` shortlist overlaps the exact
+    top-5 or retrieves the query itself.  Given a one-row ``n_mismatch``
+    (see :func:`_n_mismatch`), ``match_col`` asserts it is 0."""
+    exact = similarity.cosine_topk(queries, corpus, k=6)
+    best_other = (
+        exact.filter(F.col("query_id") != F.col("corpus_id"))
+        .withColumn(
+            "__rn",
+            F.row_number().over(
+                Window.partitionBy("query_id").orderBy(
+                    F.col("similarity").desc(), F.col("corpus_id")
+                )
+            ),
+        )
+        .filter(F.col("__rn") == 1)
+        .select("query_id", F.col("corpus_id").cast("long").alias("best_other"))
+    )
+    exact5 = exact.filter(F.col("rank") <= 5).select(
+        "query_id", F.col("corpus_id").alias("__eid")
+    )
+    overlap = (
+        ann.join(
+            exact5,
+            (ann["query_id"] == exact5["query_id"])
+            & (ann["corpus_id"] == exact5["__eid"]),
+        )
+        .groupBy(ann["query_id"].alias("qid"))
+        .agg(F.count(F.lit(1)).alias("__n_overlap"))
+    )
+    self_hit = ann.groupBy("query_id").agg(
+        F.max((F.col("query_id") == F.col("corpus_id")).cast("int")).alias("__self")
+    )
+    n_corpus = corpus.agg(F.count(F.lit(1)).alias("n_corpus"))
+    out = (
+        best_other.join(overlap, best_other["query_id"] == overlap["qid"], "left")
+        .join(self_hit, "query_id", "left")
+        .crossJoin(n_corpus)
+    )
+    cols = [
+        "query_id",
+        "best_other",
+        F.col("n_corpus").cast("long").alias("n_corpus"),
+        (
+            (F.coalesce(F.col("__n_overlap"), F.lit(0)) >= 1)
+            | (F.coalesce(F.col("__self"), F.lit(0)) == 1)
+        ).alias(ok_col),
+    ]
+    if n_mismatch is not None:
+        out = out.crossJoin(n_mismatch)
+        cols.append((F.col("n_mismatch") == 0).alias(match_col))
+    return out.select(*cols).orderBy("query_id")
+
 
 _MMR_ORACLE = """
 WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
@@ -654,52 +760,30 @@ def q_similarity_mmr_rerank_diverse(spark, sf_dir):
     )
 
 
-@q(
-    "similarity_ivf_index_probe",
-    # the same exact-top-k SQL as similarity_cosine_topk: with
-    # nprobe = n_cells every inverted list is scanned, so the persisted
-    # index must return EXACT top-5 — a full hash check of the
-    # build→write→sidecar→prune→probe cycle
-    """
-WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-           FROM embeddings WHERE vec_id < 10),
-     c AS (SELECT vec_id AS corpus_id, CAST(embedding AS DOUBLE[]) AS cv
-           FROM embeddings WHERE vec_id >= 10),
-     s AS (SELECT query_id, corpus_id,
-                  list_dot_product(qv, cv)
-                    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv)))
-                    AS similarity
-           FROM q CROSS JOIN c),
-     r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                        ORDER BY similarity DESC, corpus_id) AS rnk
-           FROM s)
-SELECT query_id, corpus_id, round(similarity, 6) AS similarity, CAST(rnk AS INT) AS rank
-FROM r WHERE rnk <= 5
-""",
-)
-def q_similarity_ivf_index_probe(spark, sf_dir):
-    """PERSISTED IVF index, built once and probed from disk: the corpus
-    is written as cell-partitioned parquet inverted lists with a
-    centroid sidecar, and the probe prunes the scan to the probed cells'
-    partitions.  With nprobe = n_cells (8) every list is scanned, so the
-    result must be EXACT top-5 cosine — the oracle hash-checks the whole
-    cycle while similarity_ivf_ann covers the approximate (nprobe <
-    n_cells) recall bound."""
-    import os
-    import tempfile
+@operator("similarity_ivf_index_probe", _ann_index_inputs)
+def op_similarity_ivf_index_probe(queries, corpus, path):
+    """PERSISTED IVF index, built and then probed from disk: the corpus
+    is written as 16 trained cells of cell-partitioned parquet inverted
+    lists with a centroid sidecar, and the probe prunes the scan to the
+    probed cells' partitions.  Probing all 16 cells makes the result
+    exact top-5 cosine; similarity_ivf_ann covers the approximate
+    (nprobe < n_cells) recall bound."""
+    similarity.ivf_index_build(
+        corpus, "corpus_id", "corpus_vec", path, n_cells=16, train=True
+    )
+    return similarity.ivf_index_probe(
+        queries.sparkSession, path, queries, "query_id", "query_vec", k=5, nprobe=16
+    )
 
-    t = _t(spark, sf_dir)
-    emb = t["embeddings"]
-    qs = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
-    )
-    cs = emb.filter(F.col("vec_id") >= 10).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
-    )
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    path = os.path.join(tempfile.gettempdir(), f"ss_ivf_index{tag}")
-    similarity.ivf_index_build(cs, "cid", "cv", path, n_cells=8, train=True)
-    out = similarity.ivf_index_probe(spark, path, qs, "qid", "qv", k=5, nprobe=8)
+
+# the same exact-top-k SQL as similarity_cosine_topk: with nprobe = n_cells
+# every inverted list is scanned, so the persisted index must return EXACT
+# top-5 — a full hash check of the build→write→sidecar→prune→probe cycle
+@checked("similarity_ivf_index_probe", _TOPK_ORACLE)
+def q_similarity_ivf_index_probe(op, queries, corpus, path):
+    """The persisted-index probe over the non-query corpus, ranked and
+    rounded like similarity_cosine_topk."""
+    out = op(queries, corpus.filter(F.col("corpus_id") >= 10), path)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("corpus_id")
     )
@@ -711,25 +795,7 @@ def q_similarity_ivf_index_probe(spark, sf_dir):
     )
 
 
-@q(
-    "streaming_ann_index_probe",
-    """
-WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-           FROM embeddings WHERE vec_id < 10),
-     c AS (SELECT vec_id AS corpus_id, CAST(embedding AS DOUBLE[]) AS cv
-           FROM embeddings WHERE vec_id >= 10),
-     s AS (SELECT query_id, corpus_id,
-                  list_dot_product(qv, cv)
-                    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv)))
-                    AS similarity
-           FROM q CROSS JOIN c),
-     r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                        ORDER BY similarity DESC, corpus_id) AS rnk
-           FROM s)
-SELECT query_id, corpus_id, round(similarity, 6) AS similarity, CAST(rnk AS INT) AS rank
-FROM r WHERE rnk <= 5
-""",
-)
+@q("streaming_ann_index_probe", _TOPK_ORACLE)
 def q_streaming_ann_index_probe(spark, sf_dir):
     """STREAMING ANN over the persisted IVF index: query vectors arrive
     as a multi-batch file stream (maxFilesPerTrigger=1 over 2 source
@@ -777,24 +843,6 @@ def q_streaming_ann_index_probe(spark, sf_dir):
     )
 
 
-_TOPK_ORACLE = """
-WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-           FROM embeddings WHERE vec_id < 10),
-     c AS (SELECT vec_id AS corpus_id, CAST(embedding AS DOUBLE[]) AS cv
-           FROM embeddings WHERE vec_id >= 10),
-     s AS (SELECT query_id, corpus_id,
-                  list_dot_product(qv, cv)
-                    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv)))
-                    AS similarity
-           FROM q CROSS JOIN c),
-     r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                        ORDER BY similarity DESC, corpus_id) AS rnk
-           FROM s)
-SELECT query_id, corpus_id, round(similarity, 6) AS similarity, CAST(rnk AS INT) AS rank
-FROM r WHERE rnk <= 5
-"""
-
-
 @q("similarity_cosine_topk", _TOPK_ORACLE)
 def q_similarity_cosine_topk(spark, sf_dir):
     """Brute-force cosine top-k (exact ANN baseline): broadcast queries,
@@ -821,24 +869,23 @@ FROM embeddings WHERE vec_id < 10 ORDER BY query_id
 """
 
 
-@q("similarity_lsh_ann", _LSH_ANN_ORACLE)
-def q_similarity_lsh_ann(spark, sf_dir):
-    """LSH-bucketed approximate top-k (the 100 TB scale path), checked via
-    the sign-random-projection collision GUARANTEE: each query vector is
-    itself in the corpus, an identical (or positively-scaled) vector gets
-    the same sign pattern ⇒ the same bucket in EVERY table ⇒ is always a
-    candidate, and exact rescoring puts it at rank 1 with cosine 1.0.  So
-    per query: top-1 cosine rounds to 1.0 and the query id appears in its
-    own top-k — deterministic booleans next to DuckDB-pinned ids/counts."""
-    t = _t(spark, sf_dir)
-    emb = t["embeddings"]
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("corpus_id"), F.col("embedding").alias("corpus_vec")
-    )
-    out = similarity.lsh_topk(queries, corpus, k=5, dim=64, planes=8, tables=4)
+@operator("similarity_lsh_ann", _ann_inputs)
+def op_similarity_lsh_ann(queries, corpus):
+    """LSH-bucketed approximate top-k (the 100 TB scale path): 4 tables of
+    8 sign-random-projection planes, exact cosine rescoring."""
+    return similarity.lsh_topk(queries, corpus, k=5, dim=64, planes=8, tables=4)
+
+
+@checked("similarity_lsh_ann", _LSH_ANN_ORACLE)
+def q_similarity_lsh_ann(op, queries, corpus):
+    """LSH ANN checked via the sign-random-projection collision
+    GUARANTEE: each query vector is itself in the corpus, an identical
+    (or positively-scaled) vector gets the same sign pattern ⇒ the same
+    bucket in EVERY table ⇒ is always a candidate, and exact rescoring
+    puts it at rank 1 with cosine 1.0.  So per query: top-1 cosine rounds
+    to 1.0 and the query id appears in its own top-k — deterministic
+    booleans next to DuckDB-pinned ids/counts."""
+    out = op(queries, corpus)
     n_corpus = corpus.agg(F.count(F.lit(1)).alias("n_corpus"))
     per_q = out.groupBy("query_id").agg(
         F.max(F.when(F.col("rank") == 1, F.round("similarity", 6))).alias("top1_cos"),
@@ -856,168 +903,52 @@ def q_similarity_lsh_ann(spark, sf_dir):
     )
 
 
-@q(
-    "similarity_pq_ann",
-    """SELECT q.vec_id AS query_id,
-              (SELECT c.vec_id FROM embeddings c WHERE c.vec_id <> q.vec_id
-               ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC,
-                        c.vec_id LIMIT 1)::BIGINT AS best_other,
-              (SELECT COUNT(*) FROM embeddings)::BIGINT AS n_corpus,
-              TRUE AS pq_signal_ok
-       FROM embeddings q WHERE q.vec_id < 10 ORDER BY 1""",
-)
-def q_similarity_pq_ann(spark, sf_dir):
+@operator("similarity_pq_ann", _ann_inputs)
+def op_similarity_pq_ann(queries, corpus):
     """Product-quantization ANN (asymmetric distance computation): the
     corpus compresses to m=8 uint8 codes per vector and scoring is m JVM
     array lookups per pair — the memory-compression scale path (32× at
-    dim 64).  Checked three ways in one plan: the exact scorer's best
+    dim 64)."""
+    return similarity.pq_topk(
+        queries, corpus, "query_id", "query_vec", "corpus_id", "corpus_vec",
+        k=5, m=8, ksub=16,
+    )
+
+
+@checked("similarity_pq_ann", _ann_signal_oracle("pq_signal_ok"))
+def q_similarity_pq_ann(op, queries, corpus):
+    """PQ ANN checked three ways in one plan: the exact scorer's best
     non-self neighbor hash-matches DuckDB's list_cosine_similarity; the
     corpus count pins coverage; and the PQ shortlist must either overlap
     the exact top-5 or retrieve the query itself (measured recall@5 ≈ 0.34
     on this corpus vs 0.01 random — the boolean floor is far below
     measurement, far above chance)."""
-    t = _t(spark, sf_dir)
-    emb = t["embeddings"]
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("corpus_id"), F.col("embedding").alias("corpus_vec")
-    )
-    pq = similarity.pq_topk(
-        queries, corpus, "query_id", "query_vec", "corpus_id", "corpus_vec",
-        k=5, m=8, ksub=16,
-    )
-    exact = similarity.cosine_topk(queries, corpus, k=6)
-    best_other = (
-        exact.filter(F.col("query_id") != F.col("corpus_id"))
-        .withColumn(
-            "__rn",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("similarity").desc(), F.col("corpus_id")
-                )
-            ),
-        )
-        .filter(F.col("__rn") == 1)
-        .select("query_id", F.col("corpus_id").cast("long").alias("best_other"))
-    )
-    exact5 = exact.filter(F.col("rank") <= 5).select(
-        "query_id", F.col("corpus_id").alias("__eid")
-    )
-    overlap = (
-        pq.join(
-            exact5,
-            (pq["query_id"] == exact5["query_id"]) & (pq["corpus_id"] == exact5["__eid"]),
-        )
-        .groupBy(pq["query_id"].alias("qid"))
-        .agg(F.count(F.lit(1)).alias("__n_overlap"))
-    )
-    self_hit = pq.groupBy("query_id").agg(
-        F.max((F.col("query_id") == F.col("corpus_id")).cast("int")).alias("__self")
-    )
-    n_corpus = corpus.agg(F.count(F.lit(1)).alias("n_corpus"))
-    return (
-        best_other.join(overlap, best_other["query_id"] == overlap["qid"], "left")
-        .join(self_hit, "query_id", "left")
-        .crossJoin(n_corpus)
-        .select(
-            "query_id",
-            "best_other",
-            F.col("n_corpus").cast("long").alias("n_corpus"),
-            (
-                (F.coalesce(F.col("__n_overlap"), F.lit(0)) >= 1)
-                | (F.coalesce(F.col("__self"), F.lit(0)) == 1)
-            ).alias("pq_signal_ok"),
-        )
-        .orderBy("query_id")
-    )
+    return _ann_signal(op(queries, corpus), queries, corpus, "pq_signal_ok")
 
 
-@q(
-    "similarity_ivfpq_ann",
-    """SELECT q.vec_id AS query_id,
-              (SELECT c.vec_id FROM embeddings c WHERE c.vec_id <> q.vec_id
-               ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC,
-                        c.vec_id LIMIT 1)::BIGINT AS best_other,
-              (SELECT COUNT(*) FROM embeddings)::BIGINT AS n_corpus,
-              TRUE AS ann_signal_ok
-       FROM embeddings q WHERE q.vec_id < 10 ORDER BY 1""",
-)
-def q_similarity_ivfpq_ann(spark, sf_dir):
+@operator("similarity_ivfpq_ann", _ann_inputs)
+def op_similarity_ivfpq_ann(queries, corpus):
     """IVF-PQ ANN (coarse inverted lists + residual product quantization —
     the canonical billion-scale index): corpus rows cost one cell id + m
     codes after a single Arrow-batched encode pass, probing scores only
-    nprobe cells' rows at m-lookup cost.  Oracle pattern as
-    similarity_pq_ann: exact best-other pinned via DuckDB cosine, corpus
-    count pinned, ANN shortlist bounded by an overlap-or-self floor."""
-    t = _t(spark, sf_dir)
-    emb = t["embeddings"]
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("corpus_id"), F.col("embedding").alias("corpus_vec")
-    )
-    ann = similarity.ivfpq_topk(
+    nprobe cells' rows at m-lookup cost."""
+    return similarity.ivfpq_topk(
         queries, corpus, "query_id", "query_vec", "corpus_id", "corpus_vec",
         k=5, n_cells=16, nprobe=4, m=8, ksub=16,
     )
-    exact = similarity.cosine_topk(queries, corpus, k=6)
-    best_other = (
-        exact.filter(F.col("query_id") != F.col("corpus_id"))
-        .withColumn(
-            "__rn",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("similarity").desc(), F.col("corpus_id")
-                )
-            ),
-        )
-        .filter(F.col("__rn") == 1)
-        .select("query_id", F.col("corpus_id").cast("long").alias("best_other"))
-    )
-    exact5 = exact.filter(F.col("rank") <= 5).select(
-        "query_id", F.col("corpus_id").alias("__eid")
-    )
-    overlap = (
-        ann.join(
-            exact5,
-            (ann["query_id"] == exact5["query_id"]) & (ann["corpus_id"] == exact5["__eid"]),
-        )
-        .groupBy(ann["query_id"].alias("qid"))
-        .agg(F.count(F.lit(1)).alias("__n_overlap"))
-    )
-    self_hit = ann.groupBy("query_id").agg(
-        F.max((F.col("query_id") == F.col("corpus_id")).cast("int")).alias("__self")
-    )
-    n_corpus = corpus.agg(F.count(F.lit(1)).alias("n_corpus"))
-    return (
-        best_other.join(overlap, best_other["query_id"] == overlap["qid"], "left")
-        .join(self_hit, "query_id", "left")
-        .crossJoin(n_corpus)
-        .select(
-            "query_id",
-            "best_other",
-            F.col("n_corpus").cast("long").alias("n_corpus"),
-            (
-                (F.coalesce(F.col("__n_overlap"), F.lit(0)) >= 1)
-                | (F.coalesce(F.col("__self"), F.lit(0)) == 1)
-            ).alias("ann_signal_ok"),
-        )
-        .orderBy("query_id")
-    )
+
+
+@checked("similarity_ivfpq_ann", _ann_signal_oracle("ann_signal_ok"))
+def q_similarity_ivfpq_ann(op, queries, corpus):
+    """Oracle pattern as similarity_pq_ann: exact best-other pinned via
+    DuckDB cosine, corpus count pinned, ANN shortlist bounded by an
+    overlap-or-self floor."""
+    return _ann_signal(op(queries, corpus), queries, corpus, "ann_signal_ok")
 
 
 @q(
     "similarity_ivfpq_index_probe",
-    """SELECT q.vec_id AS query_id,
-              (SELECT c.vec_id FROM embeddings c WHERE c.vec_id <> q.vec_id
-               ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC,
-                        c.vec_id LIMIT 1)::BIGINT AS best_other,
-              (SELECT COUNT(*) FROM embeddings)::BIGINT AS n_corpus,
-              TRUE AS ann_signal_ok, TRUE AS persisted_matches_memory_ok
-       FROM embeddings q WHERE q.vec_id < 10 ORDER BY 1""",
+    _ann_signal_oracle("ann_signal_ok", "persisted_matches_memory_ok"),
 )
 def q_similarity_ivfpq_index_probe(spark, sf_dir):
     """PERSISTED IVF-PQ index probed from disk: (id, m codes) rows in
@@ -1030,14 +961,7 @@ def q_similarity_ivfpq_index_probe(spark, sf_dir):
     import os
     import tempfile
 
-    t = _t(spark, sf_dir)
-    emb = t["embeddings"]
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("corpus_id"), F.col("embedding").alias("corpus_vec")
-    )
+    queries, corpus = _ann_inputs(spark, sf_dir)
     tag = sf_dir.rstrip("/").replace("/", "_")
     path = os.path.join(tempfile.gettempdir(), f"ss_ivfpq_index{tag}")
     index = similarity.ivfpq_index_build(
@@ -1050,71 +974,10 @@ def q_similarity_ivfpq_index_probe(spark, sf_dir):
         queries, corpus, "query_id", "query_vec", "corpus_id", "corpus_vec",
         k=5, n_cells=16, nprobe=4, m=8, ksub=16, index=index,
     )
-    diff = ann.select("query_id", "corpus_id", "score").withColumnRenamed(
-        "score", "s_p"
-    ).join(
-        mem.select("query_id", "corpus_id", F.col("score").alias("s_m")),
-        ["query_id", "corpus_id"],
-        "full",
-    )
-    n_mismatch = diff.agg(
-        F.coalesce(
-            F.sum(
-                (
-                    F.col("s_p").isNull()
-                    | F.col("s_m").isNull()
-                    | (F.abs(F.col("s_p") - F.col("s_m")) > 1e-9)
-                ).cast("int")
-            ),
-            F.lit(0),
-        ).alias("n_mismatch")
-    )
-    exact = similarity.cosine_topk(queries, corpus, k=6)
-    best_other = (
-        exact.filter(F.col("query_id") != F.col("corpus_id"))
-        .withColumn(
-            "__rn",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("similarity").desc(), F.col("corpus_id")
-                )
-            ),
-        )
-        .filter(F.col("__rn") == 1)
-        .select("query_id", F.col("corpus_id").cast("long").alias("best_other"))
-    )
-    exact5 = exact.filter(F.col("rank") <= 5).select(
-        "query_id", F.col("corpus_id").alias("__eid")
-    )
-    overlap = (
-        ann.join(
-            exact5,
-            (ann["query_id"] == exact5["query_id"])
-            & (ann["corpus_id"] == exact5["__eid"]),
-        )
-        .groupBy(ann["query_id"].alias("qid"))
-        .agg(F.count(F.lit(1)).alias("__n_overlap"))
-    )
-    self_hit = ann.groupBy("query_id").agg(
-        F.max((F.col("query_id") == F.col("corpus_id")).cast("int")).alias("__self")
-    )
-    n_corpus = corpus.agg(F.count(F.lit(1)).alias("n_corpus"))
-    return (
-        best_other.join(overlap, best_other["query_id"] == overlap["qid"], "left")
-        .join(self_hit, "query_id", "left")
-        .crossJoin(n_corpus)
-        .crossJoin(n_mismatch)
-        .select(
-            "query_id",
-            "best_other",
-            F.col("n_corpus").cast("long").alias("n_corpus"),
-            (
-                (F.coalesce(F.col("__n_overlap"), F.lit(0)) >= 1)
-                | (F.coalesce(F.col("__self"), F.lit(0)) == 1)
-            ).alias("ann_signal_ok"),
-            (F.col("n_mismatch") == 0).alias("persisted_matches_memory_ok"),
-        )
-        .orderBy("query_id")
+    return _ann_signal(
+        ann, queries, corpus, "ann_signal_ok",
+        _n_mismatch(ann, mem, ["query_id", "corpus_id"], "score", 1e-9),
+        "persisted_matches_memory_ok",
     )
 
 
@@ -1859,27 +1722,25 @@ FROM embeddings WHERE vec_id < 10 ORDER BY query_id
 """
 
 
-@q("similarity_ivf_ann", _IVF_ORACLE)
-def q_similarity_ivf_ann(spark, sf_dir):
-    """IVF approximate top-k (trained coarse quantizer, cell-partitioned
-    corpus, nprobe-cell probe + exact rescoring), checked via the IVF
-    guarantee: each query vector is itself in the corpus and lives in the
-    cell of its own nearest centroid — the FIRST cell the query probes —
-    so it is always a candidate and exact rescoring ranks it top with
-    cosine 1.0.  A global recall@5 floor vs the exact top-k (measured
-    ≈0.8 at nprobe=8/16 cells; bound 0.4) rides along as a boolean."""
-    t = _t(spark, sf_dir)
-    emb = t["embeddings"]
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("corpus_id"), F.col("embedding").alias("corpus_vec")
-    )
-    out = similarity.ivf_topk(
+@operator("similarity_ivf_ann", _ann_inputs)
+def op_similarity_ivf_ann(queries, corpus):
+    """IVF approximate top-k (16 sampled-centroid cells, cell-partitioned
+    corpus, 4-cell probe + exact rescoring)."""
+    return similarity.ivf_topk(
         queries, corpus, "query_id", "query_vec", "corpus_id", "corpus_vec",
-        k=5, n_cells=16, nprobe=8, train=True,
+        k=5, n_cells=16, nprobe=4,
     )
+
+
+@checked("similarity_ivf_ann", _IVF_ORACLE)
+def q_similarity_ivf_ann(op, queries, corpus):
+    """IVF ANN checked via the IVF guarantee: each query vector is itself
+    in the corpus and lives in the cell of its own nearest centroid — the
+    FIRST cell the query probes — so it is always a candidate and exact
+    rescoring ranks it top with cosine 1.0.  A global recall@5 floor vs
+    the exact top-k (measured 0.58 at sf0.01 and sf0.1; bound 0.4) rides
+    along as a boolean."""
+    out = op(queries, corpus)
     exact = similarity.cosine_topk(queries, corpus, k=5)
     n_exact = exact.agg(F.count(F.lit(1)).alias("n_ex"))
     n_hit = out.join(
@@ -2855,27 +2716,38 @@ def q_paragraph_dedup_boilerplate(spark, sf_dir):
     return dedup.paragraph_dedup(m, "doc_id", "text", max_doc_frac=0.5)
 
 
-@q("dedup_semantic_semdedup", _SEMDEDUP_ORACLE)
-def q_dedup_semantic_semdedup(spark, sf_dir):
+def _embeddings(spark, sf_dir):
+    return (_t(spark, sf_dir)["embeddings"],)
+
+
+@operator("dedup_semantic_semdedup", _embeddings)
+def op_dedup_semantic_semdedup(emb):
     """SemDeDup: spherical-k-means cluster, then drop every vector with a
-    lower-id same-cell neighbor at cosine >= 0.95.  20 planted exact
-    copies (id + 1e6) are the only pairs above 0.95 in this corpus (the
-    natural max pairwise cosine is ~0.51), and an exact copy always lands
-    in its original's cell (identical vector => identical argmax), so
-    n_dropped equals the DuckDB-computed count of ids having a lower-id
+    lower-id same-cell neighbor at cosine >= 0.95.  Per-cell work is
+    quadratic in cell size, so n_cells scales with the corpus to hold
+    cells at ~125 vectors (at least 16 cells): a constant cell count
+    would make the operator quadratic by mis-parameterization."""
+    n_cells = max(16, emb.count() // 125)
+    return dedup.semdedup(emb, "vec_id", "embedding", n_cells=n_cells, threshold=0.95)
+
+
+@checked("dedup_semantic_semdedup", _SEMDEDUP_ORACLE)
+def q_dedup_semantic_semdedup(op, emb):
+    """SemDeDup over the first 500 vectors plus 20 planted exact copies
+    (id + 1e6) — the only pairs above 0.95 in this corpus (the natural
+    max pairwise cosine is ~0.51).  An exact copy always lands in its
+    original's cell (identical vector => identical argmax), so n_dropped
+    equals the DuckDB-computed count of ids having a lower-id
     exact-cosine duplicate — the k-means dependence cancels out.
     Booleans re-verify independently: kept+dropped partitions the corpus,
     every dropped id has a justifying lower-id same-cell neighbor, and
     every planted copy was dropped."""
-    t = _t(spark, sf_dir)
-    emb = core.filter_op(t["embeddings"], F.col("vec_id") < 500).select(
-        "vec_id", "embedding"
-    )
+    emb = core.filter_op(emb, F.col("vec_id") < 500).select("vec_id", "embedding")
     planted = emb.filter(F.col("vec_id") < 20).select(
         (F.col("vec_id") + 1000000).alias("vec_id"), F.col("embedding")
     )
     aug = emb.unionByName(planted)
-    res = dedup.semdedup(aug, "vec_id", "embedding", n_cells=8, threshold=0.95)
+    res = op(aug)
     # independent exact ground truth in the same plan
     exact = dedup.embedding_cosine_pairs(aug, "vec_id", "embedding", threshold=0.95)
     n_vecs = aug.agg(F.count(F.lit(1)).alias("n_vecs"))
@@ -2919,13 +2791,7 @@ def q_dedup_semantic_semdedup(spark, sf_dir):
 
 @q(
     "streaming_ann_ivfpq_probe",
-    """SELECT q.vec_id AS query_id,
-              (SELECT c.vec_id FROM embeddings c WHERE c.vec_id <> q.vec_id
-               ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC,
-                        c.vec_id LIMIT 1)::BIGINT AS best_other,
-              (SELECT COUNT(*) FROM embeddings)::BIGINT AS n_corpus,
-              TRUE AS ann_signal_ok, TRUE AS stream_matches_batch_ok
-       FROM embeddings q WHERE q.vec_id < 10 ORDER BY 1""",
+    _ann_signal_oracle("ann_signal_ok", "stream_matches_batch_ok"),
 )
 def q_streaming_ann_ivfpq_probe(spark, sf_dir):
     """STREAMING IVF-PQ: query vectors arrive as a multi-batch file
@@ -2944,14 +2810,7 @@ def q_streaming_ann_ivfpq_probe(spark, sf_dir):
 
     from supersonic_spark.streaming.ops import stream_ann_ivfpq_probe
 
-    t = _t(spark, sf_dir)
-    emb = t["embeddings"]
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("corpus_id"), F.col("embedding").alias("corpus_vec")
-    )
+    queries, corpus = _ann_inputs(spark, sf_dir)
     tag = sf_dir.rstrip("/").replace("/", "_")
     path = os.path.join(tempfile.gettempdir(), f"ss_stream_ivfpq{tag}")
     similarity.ivfpq_index_build(
@@ -2976,76 +2835,12 @@ def q_streaming_ann_ivfpq_probe(spark, sf_dir):
     batch = similarity.ivfpq_index_probe(
         spark, path, queries, "query_id", "query_vec", k=5, nprobe=4
     )
-    diff = (
-        ann.select("query_id", "corpus_id", "rank", F.col("score").alias("s_s"))
-        .join(
-            batch.select(
-                "query_id", "corpus_id", F.col("rank").alias("r_b"),
-                F.col("score").alias("s_b"),
-            ),
-            ["query_id", "corpus_id"],
-            "full",
-        )
-    )
-    n_mismatch = diff.agg(
-        F.coalesce(
-            F.sum(
-                (
-                    F.col("s_s").isNull()
-                    | F.col("s_b").isNull()
-                    | (F.abs(F.col("s_s") - F.col("s_b")) > 1e-9)
-                    | (F.col("rank") != F.col("r_b"))
-                ).cast("int")
-            ),
-            F.lit(0),
-        ).alias("n_mismatch")
-    )
-    exact = similarity.cosine_topk(queries, corpus, k=6)
-    best_other = (
-        exact.filter(F.col("query_id") != F.col("corpus_id"))
-        .withColumn(
-            "__rn",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("similarity").desc(), F.col("corpus_id")
-                )
-            ),
-        )
-        .filter(F.col("__rn") == 1)
-        .select("query_id", F.col("corpus_id").cast("long").alias("best_other"))
-    )
-    exact5 = exact.filter(F.col("rank") <= 5).select(
-        "query_id", F.col("corpus_id").alias("__eid")
-    )
-    overlap = (
-        ann.join(
-            exact5,
-            (ann["query_id"] == exact5["query_id"])
-            & (ann["corpus_id"] == exact5["__eid"]),
-        )
-        .groupBy(ann["query_id"].alias("qid"))
-        .agg(F.count(F.lit(1)).alias("__n_overlap"))
-    )
-    self_hit = ann.groupBy("query_id").agg(
-        F.max((F.col("query_id") == F.col("corpus_id")).cast("int")).alias("__self")
-    )
-    n_corpus = corpus.agg(F.count(F.lit(1)).alias("n_corpus"))
-    return (
-        best_other.join(overlap, best_other["query_id"] == overlap["qid"], "left")
-        .join(self_hit, "query_id", "left")
-        .crossJoin(n_corpus)
-        .crossJoin(n_mismatch)
-        .select(
-            "query_id",
-            "best_other",
-            F.col("n_corpus").cast("long").alias("n_corpus"),
-            (
-                (F.coalesce(F.col("__n_overlap"), F.lit(0)) >= 1)
-                | (F.coalesce(F.col("__self"), F.lit(0)) == 1)
-            ).alias("ann_signal_ok"),
-            (F.col("n_mismatch") == 0).alias("stream_matches_batch_ok"),
-        )
-        .orderBy("query_id")
+    return _ann_signal(
+        ann, queries, corpus, "ann_signal_ok",
+        _n_mismatch(
+            ann, batch, ["query_id", "corpus_id"], "score", 1e-9, also=("rank",)
+        ),
+        "stream_matches_batch_ok",
     )
 
 
@@ -3054,22 +2849,7 @@ def q_streaming_ann_ivfpq_probe(spark, sf_dir):
     # exact top-5 over the FULL corpus: the appended half must be fully
     # probe-visible, so with nprobe = n_cells the post-append index must
     # return the identical rows a from-scratch exact rank would
-    """
-WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-           FROM embeddings WHERE vec_id < 10),
-     c AS (SELECT vec_id AS corpus_id, CAST(embedding AS DOUBLE[]) AS cv
-           FROM embeddings WHERE vec_id >= 10),
-     s AS (SELECT query_id, corpus_id,
-                  list_dot_product(qv, cv)
-                    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv)))
-                    AS similarity
-           FROM q CROSS JOIN c),
-     r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                        ORDER BY similarity DESC, corpus_id) AS rnk
-           FROM s)
-SELECT query_id, corpus_id, round(similarity, 6) AS similarity, CAST(rnk AS INT) AS rank
-FROM r WHERE rnk <= 5
-""",
+    _TOPK_ORACLE,
 )
 def q_similarity_ivf_index_append_probe(spark, sf_dir):
     """INCREMENTAL ANN ingest: build the persisted IVF index from HALF
@@ -3115,22 +2895,7 @@ def q_similarity_ivf_index_append_probe(spark, sf_dir):
     "streaming_ivf_index_append",
     # exact top-5 over the FULL corpus, as in the batch append query: the
     # streamed-in half must be fully probe-visible after the drain
-    """
-WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-           FROM embeddings WHERE vec_id < 10),
-     c AS (SELECT vec_id AS corpus_id, CAST(embedding AS DOUBLE[]) AS cv
-           FROM embeddings WHERE vec_id >= 10),
-     s AS (SELECT query_id, corpus_id,
-                  list_dot_product(qv, cv)
-                    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv)))
-                    AS similarity
-           FROM q CROSS JOIN c),
-     r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                        ORDER BY similarity DESC, corpus_id) AS rnk
-           FROM s)
-SELECT query_id, corpus_id, round(similarity, 6) AS similarity, CAST(rnk AS INT) AS rank
-FROM r WHERE rnk <= 5
-""",
+    _TOPK_ORACLE,
 )
 def q_streaming_ivf_index_append(spark, sf_dir):
     """CONTINUOUS index maintenance: half the corpus (odd vec_id)
@@ -3186,13 +2951,7 @@ def q_streaming_ivf_index_append(spark, sf_dir):
 
 @q(
     "similarity_ivfpq_index_append_probe",
-    """SELECT q.vec_id AS query_id,
-              (SELECT c.vec_id FROM embeddings c WHERE c.vec_id <> q.vec_id
-               ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC,
-                        c.vec_id LIMIT 1)::BIGINT AS best_other,
-              (SELECT COUNT(*) FROM embeddings)::BIGINT AS n_corpus,
-              TRUE AS ann_signal_ok, TRUE AS append_matches_memory_ok
-       FROM embeddings q WHERE q.vec_id < 10 ORDER BY 1""",
+    _ann_signal_oracle("ann_signal_ok", "append_matches_memory_ok"),
 )
 def q_similarity_ivfpq_index_append_probe(spark, sf_dir):
     """INCREMENTAL IVF-PQ ingest: build the persisted code index from
@@ -3207,14 +2966,7 @@ def q_similarity_ivfpq_index_append_probe(spark, sf_dir):
     import shutil
     import tempfile
 
-    t = _t(spark, sf_dir)
-    emb = t["embeddings"]
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("corpus_id"), F.col("embedding").alias("corpus_vec")
-    )
+    queries, corpus = _ann_inputs(spark, sf_dir)
     base = corpus.filter(F.col("corpus_id") % 2 == 0)
     extra = corpus.filter(F.col("corpus_id") % 2 == 1)
     tag = sf_dir.rstrip("/").replace("/", "_")
@@ -3239,71 +2991,10 @@ def _ivfpq_append_verdict(spark, path, queries, corpus, index):
         queries, corpus, "query_id", "query_vec", "corpus_id", "corpus_vec",
         k=5, n_cells=16, nprobe=4, m=8, ksub=16, index=index,
     )
-    diff = ann.select("query_id", "corpus_id", "score").withColumnRenamed(
-        "score", "s_p"
-    ).join(
-        mem.select("query_id", "corpus_id", F.col("score").alias("s_m")),
-        ["query_id", "corpus_id"],
-        "full",
-    )
-    n_mismatch = diff.agg(
-        F.coalesce(
-            F.sum(
-                (
-                    F.col("s_p").isNull()
-                    | F.col("s_m").isNull()
-                    | (F.abs(F.col("s_p") - F.col("s_m")) > 1e-9)
-                ).cast("int")
-            ),
-            F.lit(0),
-        ).alias("n_mismatch")
-    )
-    exact = similarity.cosine_topk(queries, corpus, k=6)
-    best_other = (
-        exact.filter(F.col("query_id") != F.col("corpus_id"))
-        .withColumn(
-            "__rn",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("similarity").desc(), F.col("corpus_id")
-                )
-            ),
-        )
-        .filter(F.col("__rn") == 1)
-        .select("query_id", F.col("corpus_id").cast("long").alias("best_other"))
-    )
-    exact5 = exact.filter(F.col("rank") <= 5).select(
-        "query_id", F.col("corpus_id").alias("__eid")
-    )
-    overlap = (
-        ann.join(
-            exact5,
-            (ann["query_id"] == exact5["query_id"])
-            & (ann["corpus_id"] == exact5["__eid"]),
-        )
-        .groupBy(ann["query_id"].alias("qid"))
-        .agg(F.count(F.lit(1)).alias("__n_overlap"))
-    )
-    self_hit = ann.groupBy("query_id").agg(
-        F.max((F.col("query_id") == F.col("corpus_id")).cast("int")).alias("__self")
-    )
-    n_corpus = corpus.agg(F.count(F.lit(1)).alias("n_corpus"))
-    return (
-        best_other.join(overlap, best_other["query_id"] == overlap["qid"], "left")
-        .join(self_hit, "query_id", "left")
-        .crossJoin(n_corpus)
-        .crossJoin(n_mismatch)
-        .select(
-            "query_id",
-            "best_other",
-            F.col("n_corpus").cast("long").alias("n_corpus"),
-            (
-                (F.coalesce(F.col("__n_overlap"), F.lit(0)) >= 1)
-                | (F.coalesce(F.col("__self"), F.lit(0)) == 1)
-            ).alias("ann_signal_ok"),
-            (F.col("n_mismatch") == 0).alias("append_matches_memory_ok"),
-        )
-        .orderBy("query_id")
+    return _ann_signal(
+        ann, queries, corpus, "ann_signal_ok",
+        _n_mismatch(ann, mem, ["query_id", "corpus_id"], "score", 1e-9),
+        "append_matches_memory_ok",
     )
 
 
@@ -3312,13 +3003,7 @@ def _ivfpq_append_verdict(spark, path, queries, corpus, index):
     # same oracle shape as similarity_ivfpq_index_append_probe: the
     # stream-appended code index must be indistinguishable from the
     # in-memory model over the full corpus
-    """SELECT q.vec_id AS query_id,
-              (SELECT c.vec_id FROM embeddings c WHERE c.vec_id <> q.vec_id
-               ORDER BY list_cosine_similarity(q.embedding, c.embedding) DESC,
-                        c.vec_id LIMIT 1)::BIGINT AS best_other,
-              (SELECT COUNT(*) FROM embeddings)::BIGINT AS n_corpus,
-              TRUE AS ann_signal_ok, TRUE AS append_matches_memory_ok
-       FROM embeddings q WHERE q.vec_id < 10 ORDER BY 1""",
+    _ann_signal_oracle("ann_signal_ok", "append_matches_memory_ok"),
 )
 def q_streaming_ivfpq_index_append(spark, sf_dir):
     """CONTINUOUS PQ-index maintenance: the odd half of the corpus
@@ -3337,14 +3022,7 @@ def q_streaming_ivfpq_index_append(spark, sf_dir):
 
     from supersonic_spark.streaming.ops import stream_ivfpq_index_append
 
-    t = _t(spark, sf_dir)
-    emb = t["embeddings"]
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("corpus_id"), F.col("embedding").alias("corpus_vec")
-    )
+    queries, corpus = _ann_inputs(spark, sf_dir)
     base = corpus.filter(F.col("corpus_id") % 2 == 0)
     tag = sf_dir.rstrip("/").replace("/", "_")
     path = os.path.join(tempfile.gettempdir(), f"ss_stream_ivfpq_append{tag}")
@@ -3372,22 +3050,7 @@ def q_streaming_ivfpq_index_append(spark, sf_dir):
     "similarity_ivf_index_rebalance_probe",
     # after drifting ingest + rebalance-from-index, probing every cell of
     # the REBUILT index must still be exact top-5 over the full corpus
-    """
-WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-           FROM embeddings WHERE vec_id < 10),
-     c AS (SELECT vec_id AS corpus_id, CAST(embedding AS DOUBLE[]) AS cv
-           FROM embeddings WHERE vec_id >= 10),
-     s AS (SELECT query_id, corpus_id,
-                  list_dot_product(qv, cv)
-                    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv)))
-                    AS similarity
-           FROM q CROSS JOIN c),
-     r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                        ORDER BY similarity DESC, corpus_id) AS rnk
-           FROM s)
-SELECT query_id, corpus_id, round(similarity, 6) AS similarity, CAST(rnk AS INT) AS rank
-FROM r WHERE rnk <= 5
-""",
+    _TOPK_ORACLE,
 )
 def q_similarity_ivf_index_rebalance_probe(spark, sf_dir):
     """OFFLINE REBALANCE after drifting ingest: build the IVF index from

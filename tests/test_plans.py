@@ -272,13 +272,56 @@ def test_q18_big_order_broadcast_builds_once(spark, qs):
     key set runs twice per query (at 100 TB, a full extra final-agg pass
     over the groupBy exchange).  Reuse is a runtime stage-cache decision,
     so the assertion surface is the FINAL plan after one execution."""
+    import re
+
     df = qs["tpch_q18_shape"](spark, SF_DIR)
     df.collect()
     plan = _plan(df)
-    assert "ReusedExchange" in plan, (
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    # (depth, node, id) per tree line; depth is the tree-prefix width
+    tree = [
+        (len(m.group(1)), m.group(2), m.group(3))
+        for m in re.finditer(r"^([ :+\-]*)(?:\* )?(\w[\w ]*?) \((\d+)\)", final, re.M)
+    ]
+    detail = {
+        b.split(")")[0].lstrip("("): b
+        for b in plan.split("\n\n")
+        if re.match(r"\(\d+\) ", b)
+    }
+
+    def subtree(i):
+        """Nodes under tree[i], stopping at nested broadcasts."""
+        depth, cut, out = tree[i][0], None, []
+        for d, node, nid in tree[i + 1:]:
+            if d <= depth:
+                break
+            if cut is not None and d > cut:
+                continue
+            cut = d if node == "BroadcastExchange" else None
+            out.append((node, nid))
+        return out
+
+    def is_big_order_filter(node, nid):
+        return node == "Filter" and re.search(r"sum_qty#\d+ > 250", detail[nid])
+
+    reused = re.findall(r"ReusedExchange \[Reuses operator id: (\d+)\]", plan)
+    assert len(reused) == 1, (
         "big-order broadcast build no longer reused - the second "
         "BroadcastExchange subtree stopped canonicalizing equal"
     )
+    builds = [
+        nid for i, (_, node, nid) in enumerate(tree)
+        if node == "BroadcastExchange"
+        and any(is_big_order_filter(*n) for n in subtree(i))
+    ]
+    assert builds == reused, (
+        f"big-order key set broadcast by {builds}, reused exchange is {reused}"
+    )
+    (i,) = [i for i, t in enumerate(tree) if t[1:] == ("BroadcastExchange", builds[0])]
+    aggs = [nid for node, nid in subtree(i) if node == "HashAggregate"]
+    assert any(
+        "Keys [1]: [l_orderkey" in detail[a] and "sum(qty_d" in detail[a] for a in aggs
+    ), "the reused broadcast is not over the per-order quantity aggregate"
 
 
 def test_plan_to_dot(spark, tables):

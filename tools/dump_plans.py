@@ -1,61 +1,99 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: formatted physical plans for the headline queries.
+"""Dump formatted physical plans of the headline queries — the plans
+bench.py times (``queries.operator_query``).
 
-Evidence artifact for plan review — broadcast placement, pushdown, partial
-aggregation, codegen spans.  Run after changing any operator:
-    python tools/dump_plans.py
+    python tools/dump_plans.py                          # regenerate PLANS.md
+    python tools/dump_plans.py --round N before [query ...]
+    python tools/dump_plans.py --round N after  [query ...]
+
+PLANS.md is the evidence artifact for plan review — broadcast placement,
+pushdown, partial aggregation, codegen spans; regenerate it after changing
+any operator.  It reads ``SF_DIR`` (SPARK_GRAFT_SF_DIR, default sf0.01).
+
+``--round N`` instead writes the full .explain("formatted") output per
+headline query (or per named query) to plans/rNN/<query>_<suffix>.txt —
+an optimization round's before/after evidence.  It reads
+SPARK_GRAFT_SF_DIR, by default the bench-optimized sf0.1 copy when present,
+else raw sf0.1 (plan shape is layout-independent except for scan split
+counts).
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, HERE)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
+#: PLANS.md extras beyond the headline queries: the scale-pattern shapes
+#: whose plan IS the point (no-exchange bucketed join, pruned partitioned
+#: scan, pushdown into a Python source, semi join with no right columns, ...)
+SCALE_EXTRAS = [
+    "bloom_prefilter_join_supplier",
+    "prefilter_join_part_revenue",
+    "serde_expression_textproto",
+    "dedup_duplicate_clusters",
+    "bucketed_join_orders",
+    "partitioned_write_prune",
+    "custom_python_source",
+    "semi_join_active_customers",
+    "hash_join_full_outer",
+    "mode_aggregate",
+    "moving_range_frame_events",
+    "cube_aggregate",
+    "lookup_index_join",
+    "stats_aggregate_family",
+    "expr_array_hof",
+    "json_variant_extract",
+]
 
-def main() -> None:
-    from supersonic_spark.session import get_spark
 
-    import bench
-    from __spark_entry__ import queries
-
-    spark = get_spark("dump_plans")
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = queries()
-    jvm = spark._jvm
+def _explain(df) -> str:
+    jvm = df.sparkSession._jvm
     mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    return df._jdf.queryExecution().explainString(mode)
 
+
+def dump_round(spark, rnd: int, suffix: str, only: list[str]) -> None:
+    import bench
+    from supersonic_spark.queries import operator_query
+
+    sf_dir = SF_DIR
+    if "SPARK_GRAFT_SF_DIR" not in os.environ:
+        # bench.py's optimized copy of sf0.1 when present, else raw sf0.1
+        sf_dir = os.path.join(os.path.dirname(SF_DIR), "sf0.1")
+        opt = "/tmp/ss_bench_opt" + sf_dir.rstrip("/").replace("/", "_")
+        if os.path.isdir(opt):
+            sf_dir = opt
+    outdir = os.path.join(HERE, "plans", f"r{rnd:02d}")
+    os.makedirs(outdir, exist_ok=True)
+
+    names = [n for n in bench.HEADLINE if not only or n in only]
+    names += [n for n in only if n not in bench.HEADLINE]
+    for name in names:
+        plan = _explain(operator_query(name)(spark, sf_dir))
+        path = os.path.join(outdir, f"{name}_{suffix}.txt")
+        with open(path, "w") as f:
+            f.write(f"query: {name}\nsf_dir: {sf_dir}\n\n{plan}")
+        print(f"wrote {path}")
+
+
+def dump_plans_md(spark) -> None:
+    import bench
+    from supersonic_spark.queries import operator_query
+
+    sf_dir = SF_DIR
     out = [
         "# PLANS — physical plans of the headline queries",
         "",
-        f"Generated by `tools/dump_plans.py` at {SF_DIR} (plan shapes are",
+        f"Generated by `tools/dump_plans.py` at {sf_dir} (plan shapes are",
         "scale-factor independent; AQE may re-plan exchanges at runtime).",
         "Codegen'd operators are marked `*`.",
         "",
-    ]
-    # headline queries + the scale-pattern shapes whose plan IS the point
-    # (no-exchange bucketed join, pruned partitioned scan, pushdown into a
-    # Python source, semi join with no right columns, ...)
-    scale_extras = [
-        "bloom_prefilter_join_supplier",
-        "prefilter_join_part_revenue",
-        "serde_expression_textproto",
-        "dedup_duplicate_clusters",
-        "bucketed_join_orders",
-        "partitioned_write_prune",
-        "custom_python_source",
-        "semi_join_active_customers",
-        "hash_join_full_outer",
-        "mode_aggregate",
-        "moving_range_frame_events",
-        "cube_aggregate",
-        "lookup_index_join",
-        "stats_aggregate_family",
-        "expr_array_hof",
-        "json_variant_extract",
     ]
     notes = {
         "line_dedup_boilerplate": (
@@ -70,10 +108,10 @@ def main() -> None:
             "SemDeDup: centroids train driver-side on a bounded sample; "
             "cell assignment is one Arrow-batched matmul; the only "
             "corpus-wide shuffle keys on the cell id, and the quadratic "
-            "cosine scan runs strictly within cells.  The registry twin "
-            "additionally fuses the O(n²) exact-cosine ground truth for "
-            "the oracle gate — the bench override times the operator "
-            "alone."
+            "cosine scan runs strictly within cells.  This is the operator "
+            "builder bench.py times; its registry entry runs the same "
+            "builder on a 520-vector slice and fuses the O(n²) "
+            "exact-cosine ground truth around it for the oracle gate."
         ),
         "bloom_prefilter_join_supplier": (
             "The Bloom bit-test (element_at over a literal word array + "
@@ -100,9 +138,8 @@ def main() -> None:
             "fact-fact join takes."
         ),
     }
-    for name in list(bench.HEADLINE) + scale_extras:
-        df = qs[name](spark, SF_DIR)
-        plan = df._jdf.queryExecution().explainString(mode)
+    for name in list(bench.HEADLINE) + SCALE_EXTRAS:
+        plan = _explain(operator_query(name)(spark, sf_dir))
         tree = plan.split("\n\n")[0]
         out += [f"## {name}", "", "```", tree, "```", ""]
         # surface dynamic-partition-pruning evidence (it lives in the node
@@ -113,10 +150,29 @@ def main() -> None:
         if name in notes:
             out += [f"> {notes[name]}", ""]
 
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
+    path = os.path.join(HERE, "PLANS.md")
     with open(path, "w") as f:
         f.write("\n".join(out))
     print(f"wrote {path}")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(
+        description="Dump the formatted physical plans bench.py times."
+    )
+    ap.add_argument("--round", type=int, help="write plans/rNN/ instead of PLANS.md")
+    ap.add_argument("suffix", nargs="?", choices=("before", "after"), default="before")
+    ap.add_argument("queries", nargs="*")
+    args = ap.parse_args()
+
+    from supersonic_spark.session import get_spark
+
+    spark = get_spark("dump_plans")
+    spark.sparkContext.setLogLevel("ERROR")
+    if args.round is None:
+        dump_plans_md(spark)
+    else:
+        dump_round(spark, args.round, args.suffix, args.queries)
 
 
 if __name__ == "__main__":

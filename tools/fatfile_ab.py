@@ -36,6 +36,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     import bench
+    from supersonic_spark.queries import operator_query
     from supersonic_spark.session import get_spark, release_two_pass_caches
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/supersonic_scale/sf10"
@@ -71,7 +72,7 @@ def main() -> None:
     sz = os.path.getsize(part_file) / 1e6
     print(f"fat file: {sz:.0f} MB, {n_rg} row group(s)")
 
-    q = bench._operator_overrides()["dedup_minhash_estimate"]
+    q = operator_query("dedup_minhash_estimate")
     results = {}
     for label, d in (("optimized", opt_dir), ("fat-file", fat_dir)):
         best = float("inf")

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
-"""Per-query job/stage profile: run a headline query (registry + bench
-overrides) with the UI enabled and print, for the STEADY-state execution,
-every Spark job and stage with wall time, task count, and shuffle bytes.
+"""Per-query job/stage profile: run a headline query (the plan bench.py
+times, ``queries.operator_query``) with the UI enabled and print, for the
+STEADY-state execution, every Spark job and stage with wall time, task
+count, and shuffle bytes.
 
     python tools/profile_query.py similarity_ivfpq_ann [more ...]
 
@@ -16,6 +17,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import textwrap
 import time
 import urllib.request
 
@@ -94,15 +96,19 @@ def main() -> None:
         default_dir = "/root/testdata/sf0.1"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", default_dir)
 
+    from supersonic_spark.queries import REGISTRY, operator_query
     from supersonic_spark.session import get_spark
 
-    import bench
-    from __spark_entry__ import queries
+    names = sys.argv[1:]
+    try:
+        qs = {name: operator_query(name) for name in names}
+    except KeyError as e:
+        sys.exit(f"unknown query {e}; valid names:\n"
+                 + textwrap.fill(", ".join(sorted(REGISTRY)), 79))
 
     spark = get_spark("profile_query", ui=True)
     spark.sparkContext.setLogLevel("ERROR")
-    qs = dict(queries(), **bench._operator_overrides())
-    for name in sys.argv[1:]:
+    for name in names:
         profile(spark, qs, name, sf_dir)
 
 

@@ -96,10 +96,10 @@ def _resolve_sfs() -> list[tuple[str, float]]:
 
 
 def main() -> None:
+    from supersonic_spark.queries import operator_query
     from supersonic_spark.session import get_spark
 
     import bench
-    from __spark_entry__ import queries
 
     global QUERIES
     # after a perf-relevant engine change, re-measure only the affected
@@ -111,10 +111,10 @@ def main() -> None:
     sfs = _resolve_sfs()
     spark = get_spark("scaling_curve")
     spark.sparkContext.setLogLevel("ERROR")
-    # pure-operator plans for the hash-dedup/ANN names (the registry twins
-    # fuse their exact ground truth into the plan for the oracle gate —
-    # right for correctness, wrong for a scaling curve)
-    qs = dict(queries(), **bench._operator_overrides())
+    # the operator builders for the hash-dedup/ANN names (their registry
+    # entries fuse exact ground truth around the same builder for the
+    # oracle gate — right for correctness, wrong for a scaling curve)
+    qs = {name: operator_query(name) for name in QUERIES}
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
 
     results: dict[str, dict[str, float]] = {q: {} for q in QUERIES}

@@ -83,16 +83,17 @@ def main() -> None:
         build_corpus(spark, path, n_docs, hot_fraction)
     docs = spark.read.parquet(path)
 
-    # warm run (codegen), then the measured run
+    # warm run (codegen) and the output row count, both before `mark` so
+    # their stages stay out of the sweep below; then the measured run
     dedup.substring_dup_spans(docs, "doc_id", "text").write.format(
         "noop"
     ).mode("overwrite").save()
+    n_rows = dedup.substring_dup_spans(docs, "doc_id", "text").count()
     mark = _max_stage_id(spark)
     t0 = time.perf_counter()
     out = dedup.substring_dup_spans(docs, "doc_id", "text")
     out.write.format("noop").mode("overwrite").save()
     wall = time.perf_counter() - t0
-    n_rows = out.count()
 
     # per-task summary of every stage in the measured run; the window
     # stage is the one with the largest max task
@@ -107,10 +108,16 @@ def main() -> None:
                 f"/stages/{sid}/{st['attemptId']}/taskSummary"
                 "?quantiles=0.5,1.0",
             )
-        except Exception:
+        except (OSError, ValueError) as e:  # HTTP/URL errors, malformed JSON
+            print(f"  stage {sid}: no taskSummary ({e})", file=sys.stderr)
             continue
         med, mx = summ["executorRunTime"]
         rows.append((sid, st["numCompleteTasks"], med / 1000.0, mx / 1000.0))
+    if not rows:
+        sys.exit(
+            f"no taskSummary came back for the {n_rows}-row measured run's "
+            f"stages (after stage {mark}); is the Spark UI REST API reachable?"
+        )
     rows.sort(key=lambda r: -r[3])
     print(f"wall {wall:.2f}s, {n_rows} span rows; stages (by max task):")
     for sid, nt, med, mx in rows[:5]:
